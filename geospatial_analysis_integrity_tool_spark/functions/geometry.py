@@ -6,10 +6,10 @@ padded to the batch max vertex count and masked.  No per-row Python anywhere
 
 Semantics reproduce the reference formulas:
 
-* ``pip_ray_cast``       — eastward ray cast with crossing parity and the
-  half-open vertex rule ``(yi > py) != (yj > py)`` (reference PointInsidePoly,
-  TT.c:6920-6977: eastward ray, parity, vertex-on-ray handled by strict/non-
-  strict asymmetry).
+* ``pip_ray_cast_ring``  — eastward ray cast of many points against one ring,
+  with crossing parity and the half-open vertex rule ``(yi > py) != (yj > py)``
+  (reference PointInsidePoly, TT.c:6920-6977: eastward ray, parity,
+  vertex-on-ray handled by strict/non-strict asymmetry).
 * ``segments_intersect`` — orientation tests (LineSegmentsIntersect,
   share_linux.h:979 / AllCaseLineSegmentsIntersect, moregeomchecks.c:5319).
 * ``point_seg_dist_m_poly`` — clamped projection distance in the poly-cos local
@@ -38,50 +38,12 @@ def pad_rings(xs_list, ys_list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return X, Y, V
 
 
-def pip_ray_cast(px: np.ndarray, py: np.ndarray, xs_list, ys_list) -> np.ndarray:
-    """Row-wise point-in-ring by eastward ray cast (TT.c:6920 semantics).
-
-    px, py: (n,) point coords; xs_list/ys_list: per-row ring vertex sequences
-    (closing vertex optional — the roll below closes implicitly).
-    Returns (n,) bool.
-    """
-    X, Y, V = pad_rings(xs_list, ys_list)
-    n, m = X.shape
-    if m == 0:
-        return np.zeros(n, dtype=bool)
-    px = np.asarray(px, dtype=np.float64)[:, None]
-    py = np.asarray(py, dtype=np.float64)[:, None]
-
-    # ring lengths; previous-vertex index wraps to len-1 per row
-    lens = V.sum(axis=1)
-    # drop an explicitly repeated closing vertex so parity is not double-counted
-    first_eq_last = (
-        (lens >= 2)
-        & (X[np.arange(n), np.maximum(lens - 1, 0)] == X[:, 0])
-        & (Y[np.arange(n), np.maximum(lens - 1, 0)] == Y[:, 0])
-    )
-    lens = np.where(first_eq_last, lens - 1, lens)
-    V = np.arange(m)[None, :] < lens[:, None]
-
-    idx = np.arange(m)[None, :].repeat(n, axis=0)
-    prev = np.where(idx == 0, (lens - 1)[:, None], idx - 1)
-    rows = np.arange(n)[:, None]
-    Xj = X[rows, prev]
-    Yj = Y[rows, prev]
-
-    with np.errstate(invalid="ignore", divide="ignore"):
-        cond = (Y > py) != (Yj > py)
-        x_int = (Xj - X) * (py - Y) / (Yj - Y) + X
-        crossing = cond & (px < x_int) & V
-    return (crossing.sum(axis=1) % 2).astype(bool)
-
-
 def pip_ray_cast_ring(px: np.ndarray, py: np.ndarray, ring_x, ring_y) -> np.ndarray:
-    """Many points against ONE ring (broadcast form of pip_ray_cast).
+    """Many points against ONE ring (TT.c:6920 semantics) -> (n,) bool.
 
-    Identical semantics to :func:`pip_ray_cast`; avoids the per-row padding
-    loop when a whole candidate group shares a polygon (the common case in
-    the PIP join kernel).
+    The closing vertex is optional: an explicitly repeated one is dropped so
+    parity is not double-counted, and the roll below closes the ring
+    implicitly.  The PIP join kernel calls it once per candidate group.
     """
     rx = np.asarray(ring_x, dtype=np.float64)
     ry = np.asarray(ring_y, dtype=np.float64)

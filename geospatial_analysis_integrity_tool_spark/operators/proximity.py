@@ -28,13 +28,7 @@ from ..functions.geodesy import (
     sql_point_seg_dist_m,
     with_point_seg_dist_m,
 )
-from .pip import cell_id, explode_bbox_cells
-
-
-def _with_cell(df: DataFrame, lon: str, lat: str, cell_deg: float) -> DataFrame:
-    ix = F.floor(F.col(lon) / F.lit(cell_deg))
-    iy = F.floor(F.col(lat) / F.lit(cell_deg))
-    return df.withColumn("cell", cell_id(ix, iy))
+from .pip import cell_id, explode_bbox_cells, with_point_cell
 
 
 def _with_kring_cells(df: DataFrame, lon: str, lat: str, cell_deg: float) -> DataFrame:
@@ -84,7 +78,7 @@ def point_proximity_pairs(
         else:
             worst_mlon = 111319.5 * math.cos(math.radians(max_abs_lat_deg))
             cell_deg = max(tol_m / worst_mlon * 1.001, 1e-6)
-    left = _with_cell(points, lon, lat, cell_deg).select(
+    left = with_point_cell(points, lon, lat, cell_deg).select(
         F.col(id_col).alias("id_a"),
         F.col(lon).alias("_xa"),
         F.col(lat).alias("_ya"),
@@ -135,7 +129,7 @@ def knn_points(
     cell_deg = max(
         radius_m / (111319.5 * math.cos(math.radians(max_abs_lat_deg))) * 1.001, 1e-6
     )
-    left = _with_cell(points, lon, lat, cell_deg).select(
+    left = with_point_cell(points, lon, lat, cell_deg).select(
         F.col(id_col).alias("site_id"),
         F.col(lon).alias("_xa"),
         F.col(lat).alias("_ya"),

@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geodesy import sql_point_seg_dist_m
-from ..operators.proximity import _with_cell, _with_kring_cells, point_seg_candidates
+from ..operators.pip import with_point_cell
+from ..operators.proximity import _with_kring_cells, point_seg_candidates
 from ..sources.synthetic import GEO_VIEWS, oracle_cte, register_geo_views
 
 GRID_N = 60
@@ -253,7 +254,7 @@ def q_lunma_acrs_a(spark: SparkSession, sf_dir: str) -> DataFrame:
         "eid AS aid", "xb", "yb"
     )
     ek = _with_kring_cells(ends, "xa", "ya", 0.0005)
-    ak = _with_cell(anodes, "xb", "yb", 0.0005)
+    ak = with_point_cell(anodes, "xb", "yb", 0.0005)
     matched = (
         ek.join(ak, "cell")
         .filter(

@@ -42,8 +42,8 @@ from ..operators.intersections import (
     segments_of_vertices,
     self_intersections_of_segments,
 )
+from ..operators.pip import with_point_cell
 from ..operators.proximity import (
-    _with_cell,
     _with_kring_cells,
     point_to_segment_proximity,
 )
@@ -195,7 +195,7 @@ def q_isoturn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sites = spark.table("geo_sites").select("site_id", "lon", "lat")
     cell = 0.003
-    s = _with_cell(strong, "px", "py", cell)
+    s = with_point_cell(strong, "px", "py", cell)
     t = _with_kring_cells(sites, "lon", "lat", cell)
     justified = (
         s.join(t, "cell")

@@ -556,10 +556,11 @@ def q_plproxex(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     near = point_to_segment_proximity(sites, segs, tol_m=PLPROXEX_TOL_M)
     ends = _line_ends(lines)
-    from ..operators.proximity import _with_cell, _with_kring_cells
+    from ..operators.pip import with_point_cell
+    from ..operators.proximity import _with_kring_cells
 
     cell = 0.004
-    s = _with_cell(
+    s = with_point_cell(
         spark.table("geo_sites").select("site_id", "lon", "lat"), "lon", "lat", cell
     )
     e = _with_kring_cells(ends, "px", "py", cell)

@@ -9,7 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geospatial_analysis_integrity_tool_spark.functions.geometry import (
-    pip_ray_cast,
+    pip_ray_cast_ring,
     point_seg_dist_m_poly,
     segments_intersect,
 )
@@ -30,40 +30,40 @@ def ref_pip(px, py, xs, ys):
 
 
 def test_pip_square_basic():
-    xs = [[0.0, 1.0, 1.0, 0.0]]
-    ys = [[0.0, 0.0, 1.0, 1.0]]
-    assert pip_ray_cast(np.array([0.5]), np.array([0.5]), xs, ys)[0]
-    assert not pip_ray_cast(np.array([1.5]), np.array([0.5]), xs, ys)[0]
-    assert not pip_ray_cast(np.array([-0.5]), np.array([0.5]), xs, ys)[0]
+    xs = [0.0, 1.0, 1.0, 0.0]
+    ys = [0.0, 0.0, 1.0, 1.0]
+    assert pip_ray_cast_ring(np.array([0.5]), np.array([0.5]), xs, ys)[0]
+    assert not pip_ray_cast_ring(np.array([1.5]), np.array([0.5]), xs, ys)[0]
+    assert not pip_ray_cast_ring(np.array([-0.5]), np.array([0.5]), xs, ys)[0]
 
 
 def test_pip_explicit_closing_vertex_not_double_counted():
-    open_ring = ([[0.0, 1.0, 1.0, 0.0]], [[0.0, 0.0, 1.0, 1.0]])
-    closed_ring = ([[0.0, 1.0, 1.0, 0.0, 0.0]], [[0.0, 0.0, 1.0, 1.0, 0.0]])
+    open_ring = ([0.0, 1.0, 1.0, 0.0], [0.0, 0.0, 1.0, 1.0])
+    closed_ring = ([0.0, 1.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0, 0.0])
     px, py = np.array([0.5]), np.array([0.5])
     assert (
-        pip_ray_cast(px, py, *open_ring)[0]
-        == pip_ray_cast(px, py, *closed_ring)[0]
+        pip_ray_cast_ring(px, py, *open_ring)[0]
+        == pip_ray_cast_ring(px, py, *closed_ring)[0]
         is np.True_
     )
 
 
 def test_pip_vertex_on_ray():
     # diamond whose left/right vertices sit exactly on the test ray (y=0)
-    xs = [[0.0, 1.0, 2.0, 1.0]]
-    ys = [[0.0, -1.0, 0.0, 1.0]]
-    assert pip_ray_cast(np.array([1.0]), np.array([0.0]), xs, ys)[0]
-    assert not pip_ray_cast(np.array([3.0]), np.array([0.0]), xs, ys)[0]
-    assert not pip_ray_cast(np.array([-1.0]), np.array([0.0]), xs, ys)[0]
+    xs = [0.0, 1.0, 2.0, 1.0]
+    ys = [0.0, -1.0, 0.0, 1.0]
+    assert pip_ray_cast_ring(np.array([1.0]), np.array([0.0]), xs, ys)[0]
+    assert not pip_ray_cast_ring(np.array([3.0]), np.array([0.0]), xs, ys)[0]
+    assert not pip_ray_cast_ring(np.array([-1.0]), np.array([0.0]), xs, ys)[0]
 
 
 def test_pip_concave():
     # U-shape: points in the notch are outside
-    xs = [[0.0, 4.0, 4.0, 3.0, 3.0, 1.0, 1.0, 0.0]]
-    ys = [[0.0, 0.0, 3.0, 3.0, 1.0, 1.0, 3.0, 3.0]]
-    assert not pip_ray_cast(np.array([2.0]), np.array([2.0]), xs, ys)[0]
-    assert pip_ray_cast(np.array([0.5]), np.array([2.0]), xs, ys)[0]
-    assert pip_ray_cast(np.array([2.0]), np.array([0.5]), xs, ys)[0]
+    xs = [0.0, 4.0, 4.0, 3.0, 3.0, 1.0, 1.0, 0.0]
+    ys = [0.0, 0.0, 3.0, 3.0, 1.0, 1.0, 3.0, 3.0]
+    assert not pip_ray_cast_ring(np.array([2.0]), np.array([2.0]), xs, ys)[0]
+    assert pip_ray_cast_ring(np.array([0.5]), np.array([2.0]), xs, ys)[0]
+    assert pip_ray_cast_ring(np.array([2.0]), np.array([0.5]), xs, ys)[0]
 
 
 @settings(max_examples=200, deadline=None)
@@ -77,7 +77,7 @@ def test_pip_matches_reference_random(seed):
     ys = (r * np.sin(ang)).tolist()
     px = rng.uniform(-2.5, 2.5, 16)
     py = rng.uniform(-2.5, 2.5, 16)
-    got = pip_ray_cast(px, py, [xs] * 16, [ys] * 16)
+    got = pip_ray_cast_ring(px, py, xs, ys)
     want = np.array([ref_pip(px[i], py[i], xs, ys) for i in range(16)])
     assert (got == want).all()
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -39,6 +40,49 @@ def test_pip_join_cross_cell_duplication(spark):
     )
     rows = pip_join(pts, polys, cell_deg=1.0).collect()
     assert sorted((r.point_id, r.poly_id) for r in rows) == [(1, 10), (2, 10)]
+
+
+@pytest.mark.parametrize(
+    "build, kernel",
+    [
+        ("broadcast", "fast"),
+        ("shipped", "fast"),
+        ("salted", "fast"),
+        ("broadcast", "gait"),
+        ("shipped", "gait"),
+    ],
+)
+def test_pip_builds_agree(spark, monkeypatch, build, kernel):
+    """Every build of the PIP join returns the default pip_join's rows."""
+    import sys
+
+    from geospatial_analysis_integrity_tool_spark.operators import pip
+    from geospatial_analysis_integrity_tool_spark.sources.synthetic import (
+        register_geo_views,
+    )
+
+    register_geo_views(spark, SF_SMALL)
+    points = spark.table("geo_points")
+    zones = spark.table("geo_zones").select(
+        F.col("zone_id"),
+        F.array("x1", "x2", "x3").alias("xs"),
+        F.array("y1", "y2", "y3").alias("ys"),
+    )
+    ids = {"point_id": "point_id", "poly_id": "zone_id"}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = rows(pip.pip_join(points, zones, **ids))
+    if build == "salted":
+        got = pip.pip_join_salted(points, zones, target_rows_per_task=5, **ids)
+    else:
+        limit = 0 if build == "shipped" else sys.maxsize
+        monkeypatch.setattr(pip, "BROADCAST_MAX_VERTEX_BYTES", limit)
+        rings = pip._cover(zones, "zone_id", "xs", "ys", pip.DEFAULT_CELL_DEG)[1]
+        assert (rings is None) == (build == "shipped")
+        got = pip.pip_join(points, zones, kernel=kernel, **ids)
+    assert want and rows(got) == want
 
 
 def test_proximity_planted(spark):

@@ -80,6 +80,33 @@ def test_checkpoint_resume_skips_done_partitions(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_checkpoint_drops_uncommitted_partitions(spark):
+    """A partition on disk but not in the manifest (a crashed run's leftover)
+    reaches neither the lineage nor the returned frame."""
+    from geospatial_analysis_integrity_tool_spark.plans.checkpointing import (
+        lineage,
+        run_stage_checkpointed,
+    )
+
+    out = tempfile.mkdtemp(prefix="gait_ckpt_")
+    try:
+        df = spark.range(100).select(
+            (F.col("id") % 4).alias("cell"), F.col("id").alias("v")
+        )
+        run_stage_checkpointed(spark, "s1", df, "cell", out)
+        lin = lineage(out)
+        spark.createDataFrame([(7, -1)], "cell long, v long").write.mode(
+            "append"
+        ).partitionBy("cell").parquet(out)
+
+        full = run_stage_checkpointed(spark, "s1", df, "cell", out)
+        assert lineage(out) == lin
+        assert full.filter(F.col("cell") == 7).count() == 0
+        assert full.count() == 100
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_stream_extract_matches_batch(spark):
     import tempfile
 

@@ -26,7 +26,10 @@ import pytest
 from tools import ref_oracle
 import geospatial_analysis_integrity_tool_spark.functions.gait_parity as gp
 from geospatial_analysis_integrity_tool_spark.functions.geodesy import equirect_dist_m_np, truncate3_np
-from geospatial_analysis_integrity_tool_spark.functions.geometry import pip_ray_cast, segments_intersect
+from geospatial_analysis_integrity_tool_spark.functions.geometry import (
+    pip_ray_cast_ring,
+    segments_intersect,
+)
 
 pytestmark = pytest.mark.skipif(
     not ref_oracle.available(),
@@ -271,7 +274,7 @@ def test_quarter_degree_boundary_bitexact(oracle):
 # ---------------------------------------------------------------------------
 
 def test_production_pip_agrees_off_boundary():
-    """pip_ray_cast (half-open rule) == PointInsidePoly semantics whenever the
+    """pip_ray_cast_ring (half-open rule) == PointInsidePoly semantics whenever the
     test point is not exactly on a vertex ray — the measure-zero set where the
     C's explicit collinear-run branch takes over.  On that set the parity
     kernel (point_inside_poly_gait) is the reference-exact path."""
@@ -286,7 +289,12 @@ def test_production_pip_agrees_off_boundary():
         py.append(rng.uniform(ys.min() - 50, ys.max() + 50))
     px = np.array(px)
     py = np.array(py)
-    fast = pip_ray_cast(px, py, xs_list, ys_list)
+    fast = np.array(
+        [
+            pip_ray_cast_ring(px[i : i + 1], py[i : i + 1], xs, ys)[0]
+            for i, (xs, ys) in enumerate(zip(xs_list, ys_list))
+        ]
+    )
     m = max(len(a) for a in xs_list)
     X = np.full((len(px), m), 0.0)
     Y = np.full((len(px), m), 0.0)

@@ -63,7 +63,7 @@ def main(n_pages: int, out_dir: str) -> dict:
     enc = encode_cells(feats, hex_res=(7,), s2_levels=(10,))
     enc = enc.withColumnRenamed("hex_r7", "cell")
 
-    # 3. partition plan (metrics only here; joins use it at scale)
+    # 3. partition plan (reported as metrics; no join here consumes it)
     hist = cell_histogram(enc)
     plan = salt_plan(hist, target_rows_per_task=100_000)
     metrics["n_cells"] = hist.count()
