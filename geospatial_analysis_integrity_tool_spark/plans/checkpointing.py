@@ -96,10 +96,11 @@ def run_stage_checkpointed(
     # pre-write stats pass would double the stage's compute.  Partition
     # values round-trip through directory names, so cast the read-back
     # columns to the stage schema before hashing (parquet partition
-    # inference narrows types and moves the column last).
-    back = spark.read.parquet(out_dir).select(
-        *[F.col(c).cast(df.schema[c].dataType) for c in df.columns]
-    )
+    # inference narrows types and moves the column last).  One read serves
+    # both the lineage stats and the return value: each read of out_dir
+    # costs its own file listing and schema-inference job.
+    out = spark.read.parquet(out_dir)
+    back = out.select(*[F.col(c).cast(df.schema[c].dataType) for c in df.columns])
     if done:
         back = back.filter(~F.col(partition_col).isin(done_vals))
     cols = ", ".join(df.columns)
@@ -120,7 +121,7 @@ def run_stage_checkpointed(
             "wall_sec": round(wall, 3),
         }
     write_manifest(out_dir, manifest)
-    return spark.read.parquet(out_dir)
+    return out
 
 
 def lineage(out_dir: str) -> dict:

@@ -49,6 +49,13 @@ _FP = 65536
 #: the target-domain sample: two of the twenty synthetic sources (~10%)
 TARGET_SOURCES = ("src0", "src1")
 SELECT_K = 50
+#: the Gumbel jitter: the Knuth hash ``(doc_id * 2654435761) mod 2^32`` at
+#: the 2^16 scale.  _FP divides 2^32, so reducing doc_id mod _FP first gives
+#: the same value with a product below 2^48 — a doc_id reduced mod 2^32
+#: alone still overflows BIGINT from residues of ~3.5e9.  The same text
+#: runs in Spark and DuckDB.
+GUMBEL_FP_SQL = f"((doc_id % {_FP}) * 2654435761) % {_FP}"
+assert 2**32 % _FP == 0
 
 _TOKS = "filter(split(text, '\\\\s+'), t -> t <> '')"
 
@@ -125,7 +132,7 @@ def q_docs_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.expr("c * s")).alias("logw_fp"))
         .withColumn(
             "gumbel_fp",
-            F.expr(f"((doc_id * 2654435761) % 4294967296) % {_FP}"),
+            F.expr(GUMBEL_FP_SQL),
         )
     )
     w = Window.orderBy(F.desc(F.expr("logw_fp + gumbel_fp")), F.asc("doc_id"))
@@ -174,7 +181,7 @@ scores AS (
 ),
 logw AS (
   SELECT doc_id, CAST(SUM(c * s) AS BIGINT) AS logw_fp,
-         CAST(((doc_id * 2654435761) % 4294967296) % {_FP} AS BIGINT)
+         CAST({GUMBEL_FP_SQL} AS BIGINT)
            AS gumbel_fp
   FROM (
     SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS c FROM feats

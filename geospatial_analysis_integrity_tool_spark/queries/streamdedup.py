@@ -43,6 +43,23 @@ BAND_OFFS = (1, 5, 9, 13)
 _SCHEMA = "doc_id long, batch_idx long, band long, sig long"
 
 
+def lsh_fixture_name(docs) -> str:
+    """Cache directory name of the fixture derived from ``docs``.
+
+    The fixture is DERIVED from the documents table, so the name carries a
+    digest of the full (doc_id, text) content: a regenerated corpus with the
+    same cardinality, or one edited text, must not serve stale signatures.
+    """
+    import hashlib
+
+    import pandas as pd
+
+    n = int(docs["doc_id"].max()) + 1
+    rows = pd.util.hash_pandas_object(docs[["doc_id", "text"]], index=False)
+    digest = hashlib.md5(rows.to_numpy().tobytes()).hexdigest()[:8]
+    return f"stream_lsh_{n}_{digest}"
+
+
 def write_lsh_stream_fixture(sf_dir: str) -> str:
     """Per-batch parquet of (doc_id, batch_idx, band, sig) from documents."""
     import hashlib
@@ -57,13 +74,7 @@ def write_lsh_stream_fixture(sf_dir: str) -> str:
         os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
     )
     n = int(docs["doc_id"].max()) + 1
-    # cache key includes a content digest: this fixture is DERIVED from the
-    # documents table, so a regenerated corpus with the same cardinality must
-    # not serve stale signatures
-    digest = hashlib.md5(
-        f"{n}|{docs['text'].str.len().sum()}|{docs['text'].iloc[0]}".encode()
-    ).hexdigest()[:8]
-    dirpath = fixture_dir(f"stream_lsh_{n}_{digest}")
+    dirpath = fixture_dir(lsh_fixture_name(docs))
     if os.path.exists(os.path.join(dirpath, "_done")):
         return dirpath
     rows = []

@@ -23,6 +23,10 @@ Layers (mirroring GAIT's Lindex layer concept, share_linux.h:782 `Lindex`):
 
 from __future__ import annotations
 
+import os
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 
 TESTDATA_TABLES = (
@@ -40,9 +44,18 @@ TESTDATA_TABLES = (
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver parquet tables as temp views (idempotent)."""
-    for t in TESTDATA_TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+    """Register the input parquet tables as temp views (idempotent).
+
+    Each table is read once per live session and ``sf_dir`` (a parquet read
+    without a schema starts a footer-reading Spark job); later calls only
+    re-point the views at the memoized DataFrames, which starts no job and
+    restores any view replaced in between.  A table is read again when its
+    file signature (path, size and mtime of every file under
+    ``<table>.parquet``) changes.  The memo is keyed weakly on the session:
+    a dropped session takes its DataFrames with it, and ``newSession()``
+    gets its own entry.
+    """
+    _register(spark, sf_dir, geo=False)
 
 
 # --- geo_points: customer -> global points -------------------------------------
@@ -304,10 +317,65 @@ def register_geo_views(spark: SparkSession, sf_dir: str) -> None:
     rather than re-deriving the fixture per scan.  Blanket cacheTable here
     was tried and rejected: it materializes every column of every view and
     penalizes the majority of queries that scan a view exactly once.
+
+    The geometry DataFrames share the per-session memo of
+    ``register_testdata_views``: built once, re-pointed on every call, and
+    rebuilt whenever any input table is read again.
     """
-    register_testdata_views(spark, sf_dir)
-    for name, sql in GEO_VIEWS.items():
-        spark.sql(sql).createOrReplaceTempView(name)
+    _register(spark, sf_dir, geo=True)
+
+
+class _Inputs:
+    """One session's memoized input views for one ``sf_dir``.
+
+    Holds the JVM DataFrames, not the Python ones: a Python DataFrame keeps
+    its session alive, so it would pin the weak memo key forever.
+    """
+
+    def __init__(self) -> None:
+        self.sigs: dict[str, tuple] = {}
+        self.tables: dict = {}
+        self.geo: dict = {}
+
+
+_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# threads may share a session: a geometry build must not interleave with a
+# re-read of its tables, or the build over the old read lands in the memo
+_LOCK = threading.Lock()
+
+
+def _signature(path: str) -> tuple:
+    """(path, size, mtime_ns) of every file of a table, a file or a directory."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(
+            os.path.join(root, f) for root, _dirs, fs in os.walk(path) for f in fs
+        )
+    sig = []
+    for p in files:
+        st = os.stat(p)
+        sig.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(sig)
+
+
+def _register(spark: SparkSession, sf_dir: str, geo: bool) -> None:
+    with _LOCK:
+        memo = _MEMO.setdefault(spark, {}).setdefault(sf_dir, _Inputs())
+        for t in TESTDATA_TABLES:
+            path = f"{sf_dir}/{t}.parquet"
+            sig = _signature(path)
+            if memo.sigs.get(t) != sig:
+                memo.tables[t] = spark.read.parquet(path)._jdf
+                memo.sigs[t] = sig
+                memo.geo = {}  # built over the previous read
+        for t, jdf in memo.tables.items():
+            jdf.createOrReplaceTempView(t)
+        if geo:
+            if not memo.geo:
+                memo.geo = {n: spark.sql(q)._jdf for n, q in GEO_VIEWS.items()}
+            for n, jdf in memo.geo.items():
+                jdf.createOrReplaceTempView(n)
 
 
 def geo_view(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -19,6 +19,29 @@ def test_log2fp_is_monotone_and_close():
         prev = v
         assert abs(v / 65536 - math.log2(n)) < 0.09
 
+def test_gumbel_jitter_is_overflow_free(spark):
+    """The Knuth-hash jitter equals its exact Python value in both engines,
+    including doc ids whose product with the multiplier exceeds BIGINT."""
+    import duckdb
+
+    from geospatial_analysis_integrity_tool_spark.queries.dsirq import (
+        _FP,
+        GUMBEL_FP_SQL,
+    )
+
+    ids = [0, 3_500_000_000, 2**40]
+    want = {d: ((d % 2**32) * 2654435761) % 2**32 % _FP for d in ids}
+    df = spark.createDataFrame([(d,) for d in ids], "doc_id long")
+    got = {r[0]: r[1] for r in df.selectExpr("doc_id", GUMBEL_FP_SQL).collect()}
+    assert got == want
+    con = duckdb.connect()
+    rows = con.execute(
+        f"SELECT doc_id, CAST({GUMBEL_FP_SQL} AS BIGINT) FROM "
+        f"(SELECT unnest([{', '.join(map(str, ids))}]::BIGINT[]) AS doc_id)"
+    ).fetchall()
+    assert dict(rows) == want
+
+
 def test_lm_perplexity_invariants(spark):
     """Bigram-LM scores: one row per doc with >= 2 tokens, positive NLL,
     ppl = truncating mean of per-bigram bits."""

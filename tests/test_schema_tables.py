@@ -91,3 +91,38 @@ def test_nunanpo_volumes():
     strict = all_models()["NFDD"]["enums"]
     shared = set(strict) & set(n["NFDD"])
     assert len(shared) > 1000
+
+
+def test_all_queries_import_from_pyfiles_zip(tmp_path):
+    """The query registry loads with the package imported from the
+    ``--py-files`` zip alone: the schema JSON is package data, not a path."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
+    from tools.make_pyfiles import build
+
+    zip_path = build(str(tmp_path / "gait_spark.zip"))
+    script = (
+        "import sys\n"
+        f"sys.path[:] = [{zip_path!r}] + [p for p in sys.path if p not in ('', {repo!r})]\n"
+        "import geospatial_analysis_integrity_tool_spark as pkg\n"
+        f"assert pkg.__file__.startswith({zip_path!r}), pkg.__file__\n"
+        "from geospatial_analysis_integrity_tool_spark.queries import all_queries\n"
+        "q, o = all_queries()\n"
+        "print(len(q))\n"
+    )
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.split()[-1] == "307"

@@ -42,3 +42,28 @@ def test_streaming_lsh_matches_batch_rule_and_replays_identically(spark):
         for r in q_streaming_lsh_dedup(spark, sf).collect()
     }
     assert rows == again
+
+
+def test_lsh_fixture_name_digests_every_document():
+    """Editing one middle document's text, length kept, renames the cached
+    fixture, so a stale fixture is never served for an edited corpus."""
+    import os
+
+    import pandas as pd
+    from conftest import SF_SMALL
+
+    from geospatial_analysis_integrity_tool_spark.queries.streamdedup import (
+        lsh_fixture_name,
+    )
+
+    docs = pd.read_parquet(
+        os.path.join(SF_SMALL, "documents.parquet"), columns=["doc_id", "text"]
+    )
+    edited = docs.copy()
+    mid = len(docs) // 2
+    text = edited.at[mid, "text"]
+    edited.at[mid, "text"] = text[::-1] if text[::-1] != text else "x" * len(text)
+    assert len(edited.at[mid, "text"]) == len(text)
+    assert edited.at[mid, "text"] != text
+    assert lsh_fixture_name(edited) != lsh_fixture_name(docs)
+    assert lsh_fixture_name(docs.copy()) == lsh_fixture_name(docs)
