@@ -17,6 +17,7 @@ contract under parallelism (SURVEY.md §7.3 note 2).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -65,16 +66,32 @@ def consolidate_scalable(
     order_keys: list[str] = ("magnitude_mm", "sedrisid"),
     dedup_keys: list[str] | None = None,
     dedup: bool = True,
+    within: tuple[str, ...] = ("errtype", "instance"),
 ) -> DataFrame:
     """Scale-safe ordinal numbering: two-phase (per-cell rank + cell offsets).
 
     ``consolidate`` windows over (errtype, instance) — a handful of partitions,
     so at 10^8 conditions the sort serializes on a few tasks.  This variant
     ranks within (errtype, instance, cell) — thousands of tasks — then adds
-    per-cell offsets computed on the tiny counts table.  The resulting total
-    order is (cell, *order_keys), which is exactly GAIT's region-major
-    numbering contract (conditions numbered in region-scan order,
-    errors.c:12480; SURVEY.md §7.3 note 2).
+    per-cell offsets computed on the tiny counts table (one row per
+    (errtype, instance, cell)).  The resulting total order is
+    (cell, *order_keys), which is exactly GAIT's region-major numbering
+    contract (conditions numbered in region-scan order, errors.c:12480;
+    SURVEY.md §7.3 note 2).
+
+    ``within`` partitions the offset window, which runs over the counts
+    table ordered by (errtype, instance, cell): the default restarts the
+    numbering at 1 in each (errtype, instance); ``within=()`` numbers the
+    whole table as one 1..N sequence in (errtype, instance, cell,
+    *order_keys) order — the consolidated report's global numbering.
+
+    The input is read once: the call runs one Spark job that evaluates the
+    (deduplicated) input into a disk-only local checkpoint, and both the
+    per-cell ranks and the counts read that copy, so neither re-runs the
+    input plan and the condition set never sits in the heap.  The
+    checkpoint's blocks are removed by Spark's ContextCleaner once the
+    returned DataFrame (and every frame derived from it) is
+    garbage-collected.
     """
     if dedup:
         if dedup_keys is None:
@@ -84,6 +101,9 @@ def consolidate_scalable(
         # caller guarantees uniqueness (no tile-overlap duplication upstream):
         # skips one full shuffle of the condition set
         deduped = conditions
+    deduped = deduped.localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY
+    )
     w_local = Window.partitionBy("errtype", "instance", cell_col).orderBy(
         *[F.col(k).asc() for k in order_keys]
     )
@@ -92,8 +112,8 @@ def consolidate_scalable(
         F.count("*").alias("_n")
     )
     w_off = (
-        Window.partitionBy("errtype", "instance")
-        .orderBy(F.col(cell_col).asc())
+        Window.partitionBy(*within)
+        .orderBy("errtype", "instance", cell_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = counts.withColumn(

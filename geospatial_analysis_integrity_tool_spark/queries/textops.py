@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable_hash import knuth32_sql
 from ..sources.synthetic import register_testdata_views
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -511,7 +512,7 @@ FROM documents
 # the same rows are kept at any parallelism (north-rule determinism).
 SAMPLE_RATES = {"en": 50, "fr": 30, "de": 20, "es": 10}
 
-_BUCKET = "CAST((doc_id * 2654435761) % 4294967296 % 100 AS BIGINT)"
+_BUCKET = f"CAST({knuth32_sql('doc_id')} % 100 AS BIGINT)"
 _RATE_CASE = (
     "CASE lang "
     + " ".join(f"WHEN '{k}' THEN {v}" for k, v in SAMPLE_RATES.items())

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable_hash import knuth32_sql
 from ..sources.pages import synth_pages
 from ..sources.synthetic import register_testdata_views
 from .nonsql import _n_pages
@@ -89,7 +90,7 @@ def q_pages_host_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sharded = pages.select(
         F.expr(f"'h' || (i % {_NHOSTS}) || '.example.org'").alias("host"),
-        F.expr("CAST((i * 2654435761) % 4294967296 AS BIGINT)").alias("hk"),
+        F.expr(f"CAST({knuth32_sql('i')} AS BIGINT)").alias("hk"),
         "i",
         "url",
     )
@@ -108,7 +109,7 @@ pages AS (
   SELECT i, 'h' || (i % {_NHOSTS}) || '.example.org' AS host,
          'https://example.org/' || ['en','fr','de','es'][CAST(i % 4 AS INT) + 1]
            || '/page/' || i AS url,
-         (i * 2654435761) % 4294967296 AS hk
+         {knuth32_sql('i')} AS hk
   FROM ids
 )
 SELECT host, url, rn FROM (

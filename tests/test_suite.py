@@ -50,7 +50,9 @@ def test_suite_numbering_dense_and_unique(spark):
         F.max("cond_num").alias("hi"),
     ).collect()[0]
     # dense 1..N with no gaps or collisions — the contract GAIT's report
-    # numbering has, produced here without a single-partition window
+    # numbering has, produced from per-cell ranks plus offsets over the
+    # small per-cell counts table (no window over the condition rows as a
+    # whole)
     assert stats["d"] == n
     assert stats["lo"] == 1
     assert stats["hi"] == n
